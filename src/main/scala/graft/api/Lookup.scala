@@ -45,17 +45,35 @@ object Lookup {
     ((h % numBuckets) + numBuckets) % numBuckets
   }
 
-  private def numBucketsOf(spark: SparkSession, table: String): Int = {
-    val rows = spark.sql(s"DESCRIBE EXTENDED $table")
-      .filter(col("col_name") === "Num Buckets").collect()
-    require(rows.nonEmpty, s"table $table is not bucketed; lookupJoin needs " +
-      "a bucketed table (Scale.writeBucketed)")
-    rows.head.getString(1).trim.toInt
+  /** The table's bucket spec: (bucket count, its one bucket column). */
+  private def bucketSpecOf(spark: SparkSession, table: String): (Int, String) = {
+    val spec = spark.sessionState.catalog.getTableMetadata(
+      spark.sessionState.sqlParser.parseTableIdentifier(table)).bucketSpec
+    require(spec.exists(_.bucketColumnNames.length == 1), s"table $table is not " +
+      "bucketed on one column; a seek needs a bucketed table (Scale.writeBucketed)")
+    (spec.get.numBuckets, spec.get.bucketColumnNames.head)
   }
 
-  /** Join `probe` against bucketed table `table` by point lookup: only
-    * the bucket files the probed keys hash into are read. Inner by
-    * default; "left_outer" keeps unmatched probe rows. */
+  /** Point lookup: the rows of bucketed table `table` whose bucket column
+    * is one of `keys`, reading only the bucket files those keys hash into
+    * (row-group stats inside the sorted buckets prune further under the
+    * pushed-down IN filter). The key set is the caller's, already on the
+    * driver — nothing is evaluated to find it. */
+  def seek(spark: SparkSession, table: String, keys: Seq[Any]): DataFrame = {
+    val (n, key) = bucketSpecOf(spark, table)
+    val full = spark.table(table)
+    val dt = full.schema(key).dataType
+    val probedBuckets = keys.map(k => bucketFor(k, dt, n)).toSet
+    val files = full.inputFiles.filter(f => bucketIdOf(f).exists(probedBuckets))
+    if (files.isEmpty) full.filter(lit(false)) // no probed bucket has data
+    else spark.read.schema(full.schema).parquet(files.toIndexedSeq: _*)
+      .filter(col(key).isin(keys: _*))
+  }
+
+  /** Join `probe` against bucketed table `table` by point lookup ([[seek]]
+    * of the probe side's distinct keys): only the bucket files the probed
+    * keys hash into are read. `tableKey` must be the table's bucket
+    * column. Inner by default; "left_outer" keeps unmatched probe rows. */
   def lookupJoin(spark: SparkSession, probe: DataFrame, table: String,
       probeKey: String, tableKey: String, joinType: String = "inner",
       maxProbeKeys: Int = 100000): DataFrame = {
@@ -64,15 +82,10 @@ object Lookup {
     require(keys.length <= maxProbeKeys,
       s"lookupJoin probe side exceeds $maxProbeKeys distinct keys; " +
         "use a plain join (shuffle or broadcast) instead")
-    val full = spark.table(table)
-    val dt = full.schema(tableKey).dataType
-    val n = numBucketsOf(spark, table)
-    val probedBuckets = keys.map(k => bucketFor(k, dt, n)).toSet
-    val files = full.inputFiles.filter(f => bucketIdOf(f).exists(probedBuckets))
-    val seeked =
-      if (files.isEmpty) full.filter(lit(false)) // no probed bucket has data
-      else spark.read.schema(full.schema).parquet(files.toIndexedSeq: _*)
-        .filter(col(tableKey).isin(keys.toSeq: _*))
+    val bucketCol = bucketSpecOf(spark, table)._2
+    require(bucketCol.equalsIgnoreCase(tableKey), s"lookupJoin key $tableKey is not the bucket " +
+      s"column $bucketCol of $table; only the bucket column can be seeked")
+    val seeked = seek(spark, table, keys.toSeq)
     probe.join(seeked, probe(probeKey) === seeked(tableKey), joinType)
   }
 }

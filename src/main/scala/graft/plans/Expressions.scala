@@ -746,15 +746,21 @@ case class NearestCentroid(child: Expression, flat: Array[Double],
   override def prettyName: String = "nearest_centroid"
 
   // structural equality despite the Array field (case-class equals would
-  // compare the array by reference and break plan canonicalization)
+  // compare the array by reference and break plan canonicalization).
+  // Arrays.equals compares elements as Double.equals does: NaN equals NaN
+  // and 0.0 differs from -0.0 — unlike `==` on the numbers, which only
+  // matters for degenerate codebooks
   override def equals(other: Any): Boolean = other match {
     case NearestCentroid(c, f, kk, dm) =>
       c == child && kk == k && dm == dim && java.util.Arrays.equals(f, flat)
     case _ => false
   }
+  // Catalyst hashes expressions repeatedly (canonicalization, expression
+  // maps); the codebook is immutable, so hash its up to 65k doubles once
+  @transient private lazy val flatHash = java.util.Arrays.hashCode(flat)
   override def hashCode(): Int =
     java.util.Objects.hash(child, Integer.valueOf(k), Integer.valueOf(dim),
-      Integer.valueOf(java.util.Arrays.hashCode(flat)))
+      Integer.valueOf(flatHash))
 
   /** Called from generated code. Fields are copied to LOCALS before the
     * loops — a field accessor inside the innermost distance loop blocks
@@ -833,15 +839,18 @@ case class PqEncodeCodes(child: Expression, flat: Array[Double],
   override def dataType: DataType = BinaryType
   override def prettyName: String = "pq_encode"
 
+  // structural equality and a cached codebook hash, as in NearestCentroid
+  // (Arrays.equals: NaN equals NaN, 0.0 differs from -0.0)
   override def equals(other: Any): Boolean = other match {
     case PqEncodeCodes(c, f, mm, ks, ds) =>
       c == child && mm == m && ks == ksub && ds == dsub &&
         java.util.Arrays.equals(f, flat)
     case _ => false
   }
+  @transient private lazy val flatHash = java.util.Arrays.hashCode(flat)
   override def hashCode(): Int =
     java.util.Objects.hash(child, Integer.valueOf(m), Integer.valueOf(ksub),
-      Integer.valueOf(dsub), Integer.valueOf(java.util.Arrays.hashCode(flat)))
+      Integer.valueOf(dsub), Integer.valueOf(flatHash))
 
   /** Called from generated code. Fields copied to locals before the
     * loops — see [[NearestCentroid.compute]] for why. */

@@ -1,51 +1,35 @@
 package graft.similarity
 
-import scala.reflect.runtime.universe.TypeTag
-
-import org.apache.spark.sql.{Column, DataFrame, Encoder}
-import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-import org.apache.spark.sql.expressions.Aggregator
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, StringType}
+import org.apache.spark.sql.types.{ByteType, DataType, DoubleType, IntegerType,
+  LongType, ShortType, StringType, StructField, StructType}
 import graft.functions._
 
-/** One scored candidate; public so encoder codegen can reach it. */
-case class Scored[T](sim: Double, id: T)
-
-/** Bounded top-k accumulator: keeps at most k (sim desc, id asc) entries.
-  * Registered via `functions.udaf`, so Spark runs it as a partial+final
-  * ObjectHashAggregate — each map task retains only k rows per query and
-  * the final merge is k-sized. This is the scale-correct replacement for
-  * `Window.partitionBy(query)` ranking, which ships EVERY scored candidate
-  * for a query to a single task. Instantiated at Long (integral corpus
-  * ids) or String (uuid/string ids). */
-private[similarity] class TopKAgg[T: TypeTag](k: Int)(implicit idOrd: Ordering[T])
-    extends Aggregator[Scored[T], Seq[Scored[T]], Seq[Scored[T]]] {
-  private val ord: Ordering[Scored[T]] =
-    Ordering.by((s: Scored[T]) => (-s.sim, s.id))
-  override def zero: Seq[Scored[T]] = Nil
-  override def reduce(b: Seq[Scored[T]], a: Scored[T]): Seq[Scored[T]] =
-    if (b.lengthCompare(k) >= 0 && ord.gteq(a, b.last)) b // a ranks at/after the kth
-    else ((a +: b).sorted(ord)).take(k)
-  override def merge(b1: Seq[Scored[T]], b2: Seq[Scored[T]]): Seq[Scored[T]] =
-    (b1 ++ b2).sorted(ord).take(k)
-  override def finish(r: Seq[Scored[T]]): Seq[Scored[T]] = r
-  override def bufferEncoder: Encoder[Seq[Scored[T]]] = ExpressionEncoder()
-  override def outputEncoder: Encoder[Seq[Scored[T]]] = ExpressionEncoder()
-}
-
-/** Approximate-nearest-neighbor search over an embedding column.
+/** Nearest-neighbor search over an embedding column: exact
+  * ([[bruteForceTopK]]) and three approximate tiers that prune candidates
+  * through an index — IVF ([[ivfTopK]], [[ivfTopKIndexed]]), multi-table
+  * LSH ([[lshTopK]]) and IVF-PQ ([[ivfPqTopK]], [[ivfPqTopKIndexed]]).
   *
-  * Two tiers, per the usual scale playbook:
-  *  - `bruteForceTopK`: exact. Broadcast the (small) query set against the
-  *    corpus — one scan, no corpus shuffle, a bounded top-k accumulator
-  *    (partial ObjectHashAggregate) per partition, then a k-sized final
-  *    merge per query. Right answer up to ~10^4 queries × any corpus size.
-  *  - `lshTopK`: sub-linear scale path. Random-hyperplane signatures bucket
-  *    the corpus (IVF-style coarse quantization with Hamming probing would
-  *    be the next refinement); only same-bucket candidates are scored.
-  *    Recall < 1 by construction — the price of not scanning 100 TB per
-  *    query.
+  * Every tier scores through ONE partition kernel ([[partitionTopK]]):
+  * the query set is collected to the driver; one pass over the corpus
+  * scan reads each row once and scores it only against the query rows a
+  * driver-built routing table ([[Routes]]) lists for it, into bounded
+  * per-query heaps; the partitions' heaps meet in one k-sized merge per
+  * query ([[rankTopK]]). Partition-local pruning, then a global top-k
+  * merge. A tier is its routing:
+  *  - exact: every row to every query;
+  *  - IVF: the row's cell to the queries whose `nprobe` nearest
+  *    centroids include it;
+  *  - LSH: each table's bucket to the queries probing it (multi-probe
+  *    bit-flips included), a query scored once per row;
+  *  - IVF-PQ: ADC over the probed cells' code rows into heaps `rerank`
+  *    deep, then the collected shortlist routes each corpus id to the
+  *    queries that listed it, for the exact re-score.
+  * Where the kernel cannot run — non-integral ids or more than
+  * [[MaxKernelQueries]] queries — a tier takes its join form, with the
+  * same routing and the same results.
   *
   * Vectors are cast float→double before arithmetic so scores are
   * reproducible across engines (and against the DuckDB oracle).
@@ -202,7 +186,7 @@ object Similarity {
     // aggregation — shuffle traffic is groups × partitions × k, never the
     // candidate stream. Large k (PQ rerank shortlists, k in the 10^5
     // band): the heap inverts — its partials OUTGROW the raw stream and
-    // each insert re-sorts a k-sized Seq (measured: the ~190k-deep
+    // each insert copies a k-sized buffer (measured: the ~190k-deep
     // shortlist at 20M vectors spent ~10 min here). One hash shuffle on
     // query_id + a Tungsten sort per query is strictly cheaper there.
     // Same ranking contract both paths: sim desc, nn_id asc on ties.
@@ -234,176 +218,154 @@ object Similarity {
         col("col.id").cast(idType).as("nn_id"), col("col.sim").as("sim"))
   }
 
-  /** Query-count bound for the [[bruteForceTopK]] partition kernel: the
-    * query matrix is driver-collected (it was driver-held before too — the
-    * crossJoin broadcast collects it), 64k × 64-dim doubles ≈ 32 MB. */
+  /** Query-count bound for the partition kernel: the query matrix is
+    * driver-collected (the join forms' broadcast collects it too),
+    * 64k × 64-dim doubles ≈ 32 MB. */
   private[similarity] val MaxKernelQueries = 65536
 
   /** Spark's `round(double, scale)` semantics exactly (RoundBase, HALF_UP):
     * NaN/Infinity pass through, else BigDecimal.valueOf → setScale →
-    * doubleValue. The kernel must round BEFORE its heap compares, because
-    * ranking (and the id tie-break) is defined on the ROUNDED score. */
+    * doubleValue. */
   private[graft] def roundHalfUp(x: Double, scale: Int): Double =
     if (java.lang.Double.isNaN(x) || java.lang.Double.isInfinite(x)) x
     else java.math.BigDecimal.valueOf(x)
       .setScale(scale, java.math.RoundingMode.HALF_UP).doubleValue()
 
+  private def idTypeOf(df: DataFrame, idCol: String): DataType =
+    df.select(col(idCol)).schema.head.dataType
+
+  /** The kernel's query side, on the driver: ids and vectors of the query
+    * rows with neither null. None — the tier takes its join form — for a
+    * non-integral id type or more than [[MaxKernelQueries]] queries. */
+  private def kernelQueries(queries: DataFrame, idCol: String, vecCol: String,
+      idTypes: DataType*): Option[(Array[Long], Array[Array[Double]])] = {
+    if (!idTypes.forall(Seq(ByteType, ShortType, IntegerType, LongType).contains)) return None
+    val rows = queries.select(col(idCol).cast("long"), col(vecCol).cast("array<double>"))
+      .limit(MaxKernelQueries + 1).collect()
+    if (rows.length > MaxKernelQueries) None
+    else Some(rows.filter(r => !r.isNullAt(0) && !r.isNullAt(1)))
+      .map(ok => (ok.map(_.getLong(0)), ok.map(_.getSeq[Double](1).toArray)))
+  }
+
+  /** sqrt of the full-length squared norm, summed in ascending index order
+    * as CosineSim (and the PQ `qnorm` aggregate) sum it. */
+  private def sqrtNorm(v: Array[Double]): Double = {
+    var s = 0.0; var i = 0
+    while (i < v.length) { s += v(i) * v(i); i += 1 }
+    math.sqrt(s)
+  }
+
+  /** CosineSim's arithmetic, operation for operation, with both norms
+    * precomputed: ascending dot over the shorter length, denominator
+    * sqrt(|q|²)·sqrt(|v|²), 0.0 when it is zero. */
+  private def cosine(qv: Array[Double], qNorm: Double, v: Array[Double], vNorm: Double): Double = {
+    val lim = math.min(qv.length, v.length)
+    var dot = 0.0; var i = 0
+    while (i < lim) { dot += qv(i) * v(i); i += 1 }
+    val denom = qNorm * vNorm
+    if (denom == 0.0) 0.0 else dot / denom
+  }
+
+  private val PartialSchema = StructType(Seq(StructField("query_id", LongType),
+    StructField("nn_id", LongType), StructField("sim", DoubleType)))
+
+  /** The partition kernel behind every tier. `rows` carries the corpus id
+    * as a long in column 0; `score` offers each row's routed candidates to
+    * the partition's heaps. The kept entries (≤ partitions × queries × k
+    * rows) merge per query through [[rankTopK]]: any global top-k entry is
+    * in its partition's top-k, and rounded ties are kept or dropped by the
+    * same (sim desc, id asc) order, so the merge sees exactly the rows
+    * that decide the join form's result. Emits (query_id, rnk, nn_id, sim),
+    * the ids cast to `qType`/`idType`. */
+  private def partitionTopK(rows: DataFrame, qIds: Array[Long], k: Int, roundTo: Int,
+      qType: DataType, idType: DataType)(score: (InternalRow, TopKHeaps) => Unit): DataFrame = {
+    val nq = qIds.length
+    val partials = rows.queryExecution.toRdd.mapPartitions { it =>
+      val heaps = new TopKHeaps(nq, k, roundTo)
+      it.foreach(row => if (!row.isNullAt(0)) { heaps.nextRow(); score(row, heaps) })
+      heaps.rows(qIds)
+    }
+    rankTopK(rows.sparkSession.createDataFrame(partials, PartialSchema), k)
+      .select(col("query_id").cast(qType).as("query_id"), col("rnk"),
+        col("nn_id").cast(idType).as("nn_id"), col("sim"))
+  }
+
+  /** The kernel scoring by cosine, over (long id, array<double> vector,
+    * array<long> keys) rows: a row is scored against the query rows
+    * `routes(t)` lists for its t-th key, its vector decoded only once it
+    * has a candidate. With `slots`, query rows sharing a slot (duplicate
+    * ids) rank in one heap and a row is scored once per slot. */
+  private def cosineTopK(rows: DataFrame, routes: Array[Routes], slots: Option[Array[Int]],
+      qIds: Array[Long], qVecs: Array[Array[Double]], k: Int, roundTo: Int,
+      qType: DataType, idType: DataType): DataFrame = {
+    val qNorms = qVecs.map(sqrtNorm)
+    val slot = slots.orNull
+    partitionTopK(rows, qIds, k, roundTo, qType, idType) { (row, heaps) =>
+      if (!row.isNullAt(1) && !row.isNullAt(2)) {
+        val id = row.getLong(0)
+        val keys = row.getArray(2)
+        var v: Array[Double] = null
+        var vNorm = 0.0
+        var t = 0
+        while (t < routes.length) {
+          val r = routes(t)
+          val p = r.find(keys.getLong(t))
+          if (p >= 0) {
+            var i = r.starts(p)
+            while (i < r.starts(p + 1)) {
+              val qi = r.queries(i)
+              val h = if (slot == null) qi else slot(qi)
+              if (qIds(qi) != id && (slot == null || heaps.firstInRow(h))) {
+                if (v == null) { v = row.getArray(1).toDoubleArray(); vNorm = sqrtNorm(v) }
+                heaps.offer(h, id, cosine(qVecs(qi), qNorms(qi), v, vNorm))
+              }
+              i += 1
+            }
+          }
+          t += 1
+        }
+      }
+    }
+  }
+
+  /** The join form of a tier, where the kernel cannot run: `pairs` holds
+    * each (query row, routed corpus row) pair, scored by `sim`; `dedupe`
+    * keeps one row per (query_id, nn_id). */
+  private def joinTopK(pairs: DataFrame, sim: Column, k: Int, dedupe: Boolean = false): DataFrame = {
+    val scored = pairs.filter(col("nn_id") =!= col("query_id"))
+      .withColumn("sim", sim).select("query_id", "nn_id", "sim")
+    rankTopK(if (dedupe) scored.dropDuplicates("query_id", "nn_id") else scored, k)
+  }
+
+  /** The query side of the join forms: (query_id, qv). */
+  private def queryRows(queries: DataFrame, idCol: String, vecCol: String): DataFrame =
+    queries.select(col(idCol).as("query_id"), col(vecCol).cast("array<double>").as("qv"))
+
+  private def cosineScore(roundTo: Int): Column = round(cosineSim(col("qv"), col("cv")), roundTo)
+
   /** Exact top-k neighbors for each query vector (cosine). Excludes
     * self-matches on id equality. Scores rounded to `roundTo` decimals
     * before ranking so ordering is reproducible; ties broken by corpus id.
     *
-    * Execution: for integral ids (every corpus here) a PARTITION KERNEL —
-    * one pass over the corpus scan that deserializes each vector ONCE,
-    * scores it against the driver-collected query matrix in a primitive
-    * loop (corpus norm computed once per row, query norms precomputed),
-    * and keeps a bounded per-query heap per partition; only
-    * partitions × queries × k partial rows reach the final k-sized merge
-    * ([[rankTopK]]). The previous crossJoin formulation materialized one
-    * joined row PER (query, corpus) PAIR — at 20M × 48 that is ~1B
-    * UnsafeRow copies each carrying both 512-byte vectors, plus a
-    * per-pair ObjectHashAggregate encoder conversion; the arithmetic
-    * (CosineSim's fused i-ascending loop, HALF_UP rounding, heap order
-    * sim desc / id asc) is replicated operation-for-operation, so results
-    * are bit-identical (spec-pinned). String ids / k > 4096 / > 64k
-    * queries keep the crossJoin form. */
+    * Execution: the partition kernel with every query routed to every row
+    * — one pass over the corpus scan, each vector decoded ONCE and scored
+    * against the driver-held query matrix in a primitive loop. The
+    * crossJoin form (one joined row per (query, corpus) pair: ~1B
+    * UnsafeRow copies at 20M × 48) remains as the join form. */
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, k: Int, roundTo: Int = 4): DataFrame = {
-    val idType = corpus.select(col(idCol)).schema.head.dataType
-    val integral = idType match {
-      case ByteType | ShortType | IntegerType | LongType => true
-      case _ => false
+    val idType = idTypeOf(corpus, idCol)
+    val qType = idTypeOf(queries, idCol)
+    kernelQueries(queries, idCol, vecCol, idType, qType) match {
+      case Some((qIds, qVecs)) =>
+        cosineTopK(corpus.select(col(idCol).cast("long"), col(vecCol).cast("array<double>"),
+            array(lit(0L))), Array(Routes(Array.fill(qIds.length)(0L), qIds.indices.toArray)),
+          None, qIds, qVecs, k, roundTo, qType, idType)
+      case None =>
+        val c = corpus.select(col(idCol).as("nn_id"), col(vecCol).cast("array<double>").as("cv"))
+        joinTopK(c.crossJoin(broadcast(queryRows(queries, idCol, vecCol))), cosineScore(roundTo), k)
     }
-    if (integral && k <= 4096) {
-      // bounded driver collect — the crossJoin broadcast held the same
-      // rows on the driver; cap + fallback instead of a hard require
-      val qRows = queries
-        .select(col(idCol).cast("long"), col(vecCol).cast("array<double>"))
-        .limit(MaxKernelQueries + 1).collect()
-      if (qRows.length <= MaxKernelQueries) {
-        val qOk = qRows.filter(r => !r.isNullAt(0) && !r.isNullAt(1))
-        val qIds = qOk.map(_.getLong(0))
-        val qVecs = qOk.map(_.getSeq[Double](1).toArray)
-        return bruteForceKernel(corpus, idCol, vecCol, idType,
-          qIds, qVecs, k, roundTo)
-      }
-    }
-    val c = corpus.select(col(idCol).as("nn_id"), col(vecCol).cast("array<double>").as("cv"))
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).cast("array<double>").as("qv"))
-    val scored = c.crossJoin(broadcast(q))
-      .filter(col("nn_id") =!= col("query_id"))
-      .withColumn("sim", round(cosineSim(col("qv"), col("cv")), roundTo))
-    rankTopK(scored, k)
   }
-
-  /** The brute-force partition kernel (see [[bruteForceTopK]]). Emits the
-    * per-partition per-query top-k partials and merges them through the
-    * same [[rankTopK]] heap the crossJoin path used — any global top-k
-    * candidate is in its partition's top-k, and rounded-tie candidates
-    * are kept/dropped by the identical (sim desc, id asc) order, so the
-    * merge sees exactly the rows that decide the old result. */
-  private def bruteForceKernel(corpus: DataFrame, idCol: String,
-      vecCol: String, idType: org.apache.spark.sql.types.DataType,
-      qIds: Array[Long], qVecs: Array[Array[Double]], k: Int,
-      roundTo: Int): DataFrame = {
-    val spark = corpus.sparkSession
-    val nq = qIds.length
-    // sqrt of each query's full-length norm — CosineSim's nb accumulates
-    // y*y in ascending index order over ALL query elements; replicated here
-    val qSqrtNorms = qVecs.map { v =>
-      var s = 0.0; var i = 0
-      while (i < v.length) { s += v(i) * v(i); i += 1 }
-      math.sqrt(s)
-    }
-    val rt = roundTo
-    // Raw-score prefilter margin: HALF_UP inclusion at scale s needs
-    // x ≥ R − 0.5·10⁻ˢ (positive R) / > (negative R); 0.6·10⁻ˢ covers both
-    // signs plus fp slop, so a candidate below (kth − margin) provably
-    // rounds strictly under the kth rounded score and can skip the
-    // BigDecimal rounding entirely — which otherwise runs per scored pair
-    // (~1B allocations at 20M × 48).
-    val margin = 0.6 * math.pow(10.0, -rt)
-    val narrowed = corpus
-      .select(col(idCol).cast("long"), col(vecCol).cast("array<double>"))
-    val partials = narrowed.queryExecution.toRdd.mapPartitions { it =>
-      // per-query bounded heaps: parallel arrays sorted (sim desc, id asc)
-      val sims = Array.ofDim[Double](nq, k)
-      val ids = Array.ofDim[Long](nq, k)
-      val sizes = new Array[Int](nq)
-      while (it.hasNext) {
-        val row = it.next()
-        if (!row.isNullAt(0) && !row.isNullAt(1)) {
-          val id = row.getLong(0)
-          val v = row.getArray(1).toDoubleArray()
-          val n = v.length
-          var na = 0.0
-          var i = 0
-          while (i < n) { na += v(i) * v(i); i += 1 }
-          val sqna = math.sqrt(na)
-          var qi = 0
-          while (qi < nq) {
-            if (qIds(qi) != id) {
-              val qv = qVecs(qi)
-              val lim = if (qv.length < n) qv.length else n
-              var dot = 0.0
-              i = 0
-              while (i < lim) { dot += qv(i) * v(i); i += 1 }
-              val denom = qSqrtNorms(qi) * sqna
-              val raw = if (denom == 0.0) 0.0 else dot / denom
-              val sz = sizes(qi)
-              val hs = sims(qi); val hd = ids(qi)
-              // fast path: a full heap whose kth ROUNDED score provably
-              // exceeds round(raw) — skip the BigDecimal rounding
-              if (sz == k && raw < hs(k - 1) - margin) { /* skip */ }
-              else {
-              val sim = roundHalfUp(raw, rt)
-              // better-than-last test mirrors TopKAgg.reduce's gteq skip
-              if (sz < k || sim > hs(sz - 1) ||
-                  (sim == hs(sz - 1) && id < hd(sz - 1))) {
-                var pos = if (sz < k) sz else k - 1
-                while (pos > 0 && (sim > hs(pos - 1) ||
-                    (sim == hs(pos - 1) && id < hd(pos - 1)))) {
-                  hs(pos) = hs(pos - 1); hd(pos) = hd(pos - 1); pos -= 1
-                }
-                hs(pos) = sim; hd(pos) = id
-                if (sz < k) sizes(qi) = sz + 1
-              }
-              }
-            }
-            qi += 1
-          }
-        }
-      }
-      val out = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Row]
-      var qi = 0
-      while (qi < nq) {
-        var p = 0
-        while (p < sizes(qi)) {
-          out += org.apache.spark.sql.Row(qIds(qi), ids(qi)(p), sims(qi)(p))
-          p += 1
-        }
-        qi += 1
-      }
-      out.iterator
-    }
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("query_id", LongType),
-      org.apache.spark.sql.types.StructField("nn_id", LongType),
-      org.apache.spark.sql.types.StructField("sim", org.apache.spark.sql.types.DoubleType)))
-    val merged = rankTopK(spark.createDataFrame(partials, schema), k)
-    merged.select(col("query_id").cast(idType).as("query_id"), col("rnk"),
-      col("nn_id").cast(idType).as("nn_id"), col("sim"))
-  }
-
-  /** Multi-table hyperplane signatures: one row per (table, vector) with
-    * the table's `nBits`-bit signature; table t uses hyperplanes seeded
-    * from t*nBits onward, so tables are independent. All tables' bits are
-    * computed in ONE native codegen'd pass over the vector
-    * (graft.plans.HyperplaneSignatures). */
-  private def signatures(df: DataFrame, idName: String, vecName: String,
-      nBits: Int, tables: Int): DataFrame =
-    df.select(col(idName), col(vecName),
-      posexplode(hyperplaneSignatures(col(vecName), nBits, tables)))
-      .withColumnRenamed("pos", "tbl").withColumnRenamed("col", "sig")
 
   /** Bounded k-means training set: a deterministic `fraction` sample of
     * the corpus (the fit is the only multi-pass stage of IVF — sampling it
@@ -598,46 +560,86 @@ object Similarity {
   private[graft] def nearestCell(centers: Array[Array[Double]]): Column => Column =
     (c: Column) => nearestCentroid(c, centers)
 
+  /** (nn_id, cv) rows → (nn_id, cv, cell). */
+  private def assignCells(c: DataFrame, centers: Array[Array[Double]]): DataFrame =
+    c.withColumn("cell", nearestCell(centers)(col("cv"))).select("nn_id", "cv", "cell")
+
+  /** Write `rows` cell-bucketed: one bucket (= one file, via the cell
+    * repartition) per cell. Bucketed by `nCells` = centers.length, NOT the
+    * requested nlist: the fit can return fewer centers than asked, and
+    * every later append buckets by centers.length — a mismatch would fail
+    * each append on the bucket spec. */
+  private def writeCells(rows: DataFrame, nCells: Int, table: String, mode: String): Unit =
+    rows.repartition(col("cell")).write.mode(mode)
+      .bucketBy(nCells, "cell").sortBy("cell").format("parquet").saveAsTable(table)
+
+  /** A query's `nprobe` nearest cells by squared L2 to the centroids,
+    * nearest first, ties to the lower cell (a stable sort): on the driver
+    * for the kernel's routing, through a UDF in the join forms. */
+  private def probeCells(centers: Array[Array[Double]], v: Array[Double], nprobe: Int): Array[Int] =
+    centers.zipWithIndex.map { case (ctr, i) =>
+      var s = 0.0; var j = 0
+      while (j < ctr.length) { val d = ctr(j) - v(j); s += d * d; j += 1 }
+      (s, i)
+    }.sortBy(_._1).take(nprobe).map(_._2)
+
+  private def probeCellsUdf(centers: Array[Array[Double]], nprobe: Int) =
+    udf((v: Seq[Double]) => probeCells(centers, v.toArray, nprobe))
+
+  /** IVF routing: each probed cell → the query rows that probe it. */
+  private def cellRoutes(probes: Array[Array[Int]]): Routes =
+    Routes(probes.flatMap(_.map(_.toLong)),
+      probes.indices.toArray.flatMap(qi => Array.fill(probes(qi).length)(qi)))
+
+  /** IVF search shared by the in-job and indexed tiers. `cellRows` gives
+    * the (nn_id, cv, cell) rows of the probed cells, for the kernel;
+    * `pairsOf` joins them to the query side exploded by `qcell`, for the
+    * join form. */
+  private def ivfSearch(queries: DataFrame, idCol: String, vecCol: String,
+      centers: Array[Array[Double]], nprobe: Int, k: Int, idType: DataType,
+      cellRows: Seq[Int] => DataFrame, pairsOf: DataFrame => DataFrame): DataFrame = {
+    val qType = idTypeOf(queries, idCol)
+    kernelQueries(queries, idCol, vecCol, idType, qType) match {
+      case Some((qIds, qVecs)) =>
+        val probes = qVecs.map(probeCells(centers, _, nprobe))
+        cosineTopK(cellRows(probes.flatten.distinct.toSeq).select(col("nn_id").cast("long"),
+            col("cv"), array(col("cell").cast("long"))),
+          Array(cellRoutes(probes)), None, qIds, qVecs, k, 4, qType, idType)
+      case None =>
+        joinTopK(pairsOf(queryRows(queries, idCol, vecCol)
+          .withColumn("qcell", explode(probeCellsUdf(centers, nprobe)(col("qv"))))),
+          cosineScore(4), k)
+    }
+  }
+
   /** IVF (inverted-file) ANN: k-means coarse quantization. A small
     * centroid codebook is learned from the corpus (driver-held, a few KB);
     * each corpus vector is assigned to its nearest cell (one distributed
     * pass); a query probes its `nprobe` nearest cells and scores only
-    * those candidates — the standard sub-linear scale path when LSH's
-    * data-independent buckets underperform on clustered data. With
-    * nprobe = nlist this is exactly brute force (recall 1), which is the
-    * contract the spec pins.
+    * those candidates — the kernel routes each row's cell to the queries
+    * that probe it, and a row in an unprobed cell costs its assignment
+    * only. The standard sub-linear scale path when LSH's data-independent
+    * buckets underperform on clustered data. With nprobe = nlist this is
+    * exactly brute force (recall 1), which is the contract the spec pins.
     *
     * At 100 TB: training samples the corpus (a 10% deterministic sample —
     * k-means cell boundaries stabilize long before full-corpus coverage,
     * and the fit is the only multi-pass stage); assignment is a scan-stage
-    * map; the (cell → vectors) layout would be persisted bucketed by cell
-    * so queries touch only their probed buckets' files. */
+    * map; the cell-bucketed layout ([[buildIvfIndex]]) lets a query read
+    * only its probed buckets. */
   def ivfTopK(corpus: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, k: Int, nlist: Int = 16,
       nprobe: Int = 4, seed: Long = 42L, maxIter: Int = 5,
       trainFraction: Double = 0.1): DataFrame = {
     val c = corpus.select(col(idCol).as("nn_id"), col(vecCol).cast("array<double>").as("cv"))
     val centers = fitCenters(c, nlist, seed, maxIter, trainFraction)
-    val assigned = c.withColumn("cell", nearestCell(centers)(col("cv")))
-      .select("nn_id", "cv", "cell")
-    val probeCells = udf { (v: Seq[Double]) =>
-      centers.zipWithIndex.map { case (ctr, i) =>
-        var s = 0.0; var j = 0
-        while (j < ctr.length) { val d = ctr(j) - v(j); s += d * d; j += 1 }
-        (s, i)
-      }.sortBy(_._1).take(nprobe).map(_._2)
-    }
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).cast("array<double>").as("qv"))
-      .withColumn("cell", explode(probeCells(col("qv"))))
-    val scored = assigned.join(broadcast(q), Seq("cell"))
-      .filter(col("nn_id") =!= col("query_id"))
-      .withColumn("sim", round(cosineSim(col("qv"), col("cv")), 4))
-    rankTopK(scored, k)
+    val assigned = assignCells(c, centers)
+    ivfSearch(queries, idCol, vecCol, centers, nprobe, k, idTypeOf(corpus, idCol),
+      _ => assigned, q => assigned.join(broadcast(q), col("cell") === col("qcell")))
   }
 
-  /** Persist an IVF index as a CELL-BUCKETED table: one bucket (= one
-    * file, via the cell repartition) per k-means cell, so a query's
-    * `nprobe` cells resolve to `nprobe` bucket files. Returns the
+  /** Persist an IVF index as a CELL-BUCKETED table ([[writeCells]]), so a
+    * query's `nprobe` cells resolve to `nprobe` bucket files. Returns the
     * centroid codebook (driver-held, a few KB — ship it with the table).
     * This is the "bucketed-by-cell persistence" serving layout: at 100 TB
     * the scan cost per query is nprobe/nlist of the corpus, independent
@@ -647,16 +649,7 @@ object Similarity {
       maxIter: Int = 5, trainFraction: Double = 0.1): Array[Array[Double]] = {
     val c = corpus.select(col(idCol).as("nn_id"), col(vecCol).cast("array<double>").as("cv"))
     val centers = fitCenters(c, nlist, seed, maxIter, trainFraction)
-    val assigned = c.withColumn("cell", nearestCell(centers)(col("cv")))
-      .select("nn_id", "cv", "cell")
-    // bucket by centers.length, NOT the requested nlist: the fit can
-    // return fewer centers than asked (kk = min(k, sampleRows) on a thin
-    // corpus), and appendToIvfIndex buckets by centers.length — a mismatch
-    // would fail every later append on the bucket spec (r7 advice)
-    assigned.repartition(col("cell"))
-      .write.mode("overwrite")
-      .bucketBy(centers.length, "cell").sortBy("cell")
-      .format("parquet").saveAsTable(table)
+    writeCells(assignCells(c, centers), centers.length, table, "overwrite")
     centers
   }
 
@@ -672,15 +665,9 @@ object Similarity {
     * IvfIndexSpec pins the law: full-probe queries on (build A, append B)
     * equal brute force over A ∪ B. */
   def appendToIvfIndex(table: String, centers: Array[Array[Double]],
-      newVecs: DataFrame, idCol: String, vecCol: String): Unit = {
-    newVecs.select(col(idCol).as("nn_id"),
-        col(vecCol).cast("array<double>").as("cv"))
-      .withColumn("cell", nearestCell(centers)(col("cv")))
-      .repartition(col("cell"))
-      .write.mode("append")
-      .bucketBy(centers.length, "cell").sortBy("cell")
-      .format("parquet").saveAsTable(table)
-  }
+      newVecs: DataFrame, idCol: String, vecCol: String): Unit =
+    writeCells(assignCells(newVecs.select(col(idCol).as("nn_id"),
+      col(vecCol).cast("array<double>").as("cv")), centers), centers.length, table, "append")
 
   /** Cell-population skew of a persisted IVF index (max/mean cell
     * population) — ONE narrow aggregation over the index's cell column.
@@ -714,39 +701,21 @@ object Similarity {
     val centers = fitCenters(c, nlist, seed, maxIter, trainFraction)
     val tmp = table + "_rebalanced_tmp"
     spark.sql(s"DROP TABLE IF EXISTS $tmp")
-    c.withColumn("cell", nearestCell(centers)(col("cv")))
-      .select("nn_id", "cv", "cell")
-      .repartition(col("cell"))
-      .write.mode("overwrite")
-      .bucketBy(centers.length, "cell").sortBy("cell")
-      .format("parquet").saveAsTable(tmp)
+    writeCells(assignCells(c, centers), centers.length, tmp, "overwrite")
     spark.sql(s"DROP TABLE IF EXISTS $table")
     spark.sql(s"ALTER TABLE $tmp RENAME TO $table")
     centers
   }
 
-  /** Query a persisted IVF index: each query's `nprobe` nearest cells
-    * are point-looked-up through the bucket-file seek (graft.api.Lookup)
-    * — only the probed cells' files are read, then scoring and the
-    * bounded top-k merge proceed as in ivfTopK. */
+  /** Query a persisted IVF index: the kernel scans only the probed cells'
+    * bucket files ([[graft.api.Lookup.seek]] of the probe sets computed on
+    * the driver — no join, the query side read once), routing each row's
+    * cell as in [[ivfTopK]]. */
   def ivfTopKIndexed(spark: org.apache.spark.sql.SparkSession, table: String,
       centers: Array[Array[Double]], queries: DataFrame,
-      idCol: String, vecCol: String, k: Int, nprobe: Int = 4): DataFrame = {
-    val probeCells = udf { (v: Seq[Double]) =>
-      centers.zipWithIndex.map { case (ctr, i) =>
-        var s = 0.0; var j = 0
-        while (j < ctr.length) { val d = ctr(j) - v(j); s += d * d; j += 1 }
-        (s, i)
-      }.sortBy(_._1).take(nprobe).map(_._2)
-    }
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).cast("array<double>").as("qv"))
-      .withColumn("qcell", explode(probeCells(col("qv"))))
-    val scored = graft.api.Lookup.lookupJoin(spark, q, table, "qcell", "cell")
-      .filter(col("nn_id") =!= col("query_id"))
-      .withColumn("sim", round(cosineSim(col("qv"), col("cv")), 4))
-      .select("query_id", "nn_id", "sim") // each vector lives in exactly one cell: no dup pairs
-    rankTopK(scored, k)
-  }
+      idCol: String, vecCol: String, k: Int, nprobe: Int = 4): DataFrame =
+    ivfSearch(queries, idCol, vecCol, centers, nprobe, k, spark.table(table).schema("nn_id").dataType,
+      graft.api.Lookup.seek(spark, table, _), graft.api.Lookup.lookupJoin(spark, _, table, "qcell", "cell"))
 
   /** Product-quantization codebooks (Jégou et al., TPAMI'11): `m`
     * independent `ksub`-centroid k-means fits over the vector's disjoint
@@ -778,7 +747,7 @@ object Similarity {
     * full vectors are sliced per sub-space locally, so the 9-codebook
     * IVF-PQ build (coarse + m sub-spaces) costs one corpus sampling scan
     * total instead of one per fit. */
-  private def pqTrainLocal(sample: Array[Array[Double]], m: Int, ksub: Int,
+  private[graft] def pqTrainLocal(sample: Array[Array[Double]], m: Int, ksub: Int,
       seed: Long, maxIter: Int): Array[Array[Array[Double]]] = {
     require(sample.nonEmpty, "pqTrain needs a non-empty sample")
     val dim = sample(0).length
@@ -811,146 +780,199 @@ object Similarity {
           .as("norm")): _*)
   }
 
+  /** A query's ADC lookup table: its inner product with every sub-space
+    * centroid, at `j * ksub + code` (16 KB at m=8/ksub=256): on the driver
+    * for the kernel, through a UDF in the join forms. */
+  private def pqLut(books: Array[Array[Array[Double]]], qv: Array[Double]): Array[Double] = {
+    val m = books.length; val ksub = books(0).length; val dsub = books(0)(0).length
+    val t = new Array[Double](m * ksub)
+    var j = 0
+    while (j < m) {
+      val cb = books(j); var c2 = 0
+      while (c2 < cb.length) {
+        var s = 0.0; var d = 0
+        while (d < dsub) { s += qv(j * dsub + d) * cb(c2)(d); d += 1 }
+        t(j * ksub + c2) = s; c2 += 1
+      }
+      j += 1
+    }
+    t
+  }
+
+  /** IVF-PQ search shared by the in-job and indexed tiers, through the
+    * kernel: ADC scores the code rows (nn_id, cell, codes, norm) of each
+    * query's probed cells — `codeRows` of the probed cells — into heaps
+    * `rerank` deep (k when rerank ≤ 0). With rerank > 0 the merged
+    * shortlist is collected, and each listed corpus id routed to the query
+    * rows that listed it for the exact re-score over `raw` (nn_id, cv).
+    * The ADC score is `pqAdc(codes, lut) / (qnorm * norm)` as Spark
+    * evaluates it: a zero denominator is a null score
+    * ([[TopKHeaps.offerNull]]) or, in ANSI mode, Spark's DIVIDE_BY_ZERO
+    * error. The join form joins the code rows to the query side exploded
+    * by `qcell` (`pairsOf`). `codeType`/`idType`: the id types of the code
+    * rows and of the result. */
+  private def ivfPqSearch(queries: DataFrame, idCol: String, vecCol: String,
+      centers: Array[Array[Double]], books: Array[Array[Array[Double]]], nprobe: Int,
+      k: Int, rerank: Int, codeType: DataType, idType: DataType,
+      codeRows: Seq[Int] => DataFrame, pairsOf: DataFrame => DataFrame,
+      raw: => DataFrame): DataFrame = {
+    val qType = idTypeOf(queries, idCol)
+    val qs = kernelQueries(queries, idCol, vecCol, codeType, idType, qType)
+    if (qs.isEmpty) {
+      val q = queryRows(queries, idCol, vecCol)
+        .withColumn("lut", udf((v: Seq[Double]) => pqLut(books, v.toArray)).apply(col("qv")))
+        .withColumn("qnorm", sqrt(aggregate(col("qv"), lit(0.0), (acc, x) => acc + x * x)))
+        .withColumn("qcell", explode(probeCellsUdf(centers, nprobe)(col("qv"))))
+      val adc = round(pqAdc(col("codes"), col("lut")) / (col("qnorm") * col("norm")), 4)
+      return if (rerank <= 0) joinTopK(pairsOf(q), adc, k)
+      else joinTopK(raw.join(broadcast(joinTopK(pairsOf(q), adc, rerank)
+          .select("query_id", "nn_id")), Seq("nn_id"))
+          .join(broadcast(queryRows(queries, idCol, vecCol)), Seq("query_id")),
+        cosineScore(4), k)
+    }
+    val (qIds, qVecs) = qs.get
+    val probes = qVecs.map(probeCells(centers, _, nprobe))
+    val routes = cellRoutes(probes)
+    val luts = qVecs.map(pqLut(books, _))
+    val qNorms = qVecs.map(sqrtNorm)
+    val ansi = queries.sparkSession.sessionState.conf.ansiEnabled
+    val (aq, ai) = if (rerank > 0) (LongType, LongType) else (qType, idType)
+    val adc = partitionTopK(codeRows(probes.flatten.distinct.toSeq).select(
+        col("nn_id").cast("long"), col("cell"), col("codes"), col("norm")),
+      qIds, if (rerank > 0) rerank else k, 4, aq, ai) { (row, heaps) =>
+      val p = if (row.anyNull) -1 else routes.find(row.getInt(1))
+      if (p >= 0) {
+        val id = row.getLong(0)
+        val codes = row.getBinary(2)
+        val norm = row.getDouble(3)
+        val m = codes.length
+        var i = routes.starts(p)
+        while (i < routes.starts(p + 1)) {
+          val qi = routes.queries(i)
+          if (qIds(qi) != id) {
+            val lut = luts(qi) // PqAdc's sum (ksub = |lut| / m), then the division
+            var s = 0.0; var j = 0
+            val ksub = if (m == 0) 0 else lut.length / m
+            while (j < m) { s += lut(j * ksub + (codes(j) & 0xff)); j += 1 }
+            val denom = qNorms(qi) * norm
+            if (denom != 0.0) heaps.offer(qi, id, s / denom)
+            else if (!ansi) heaps.offerNull(qi, id)
+            else { // Spark's own DIVIDE_BY_ZERO error
+              import org.apache.spark.sql.catalyst.expressions.{Divide, EvalMode, Literal}
+              Divide(Literal(s), Literal(denom), EvalMode.ANSI).eval()
+            }
+          }
+          i += 1
+        }
+      }
+    }
+    if (rerank <= 0) return adc
+    val lists = adc.select("query_id", "nn_id").queryExecution.toRdd.mapPartitions { it =>
+      val q = Array.newBuilder[Long]; val n = Array.newBuilder[Long]
+      it.foreach { r => q += r.getLong(0); n += r.getLong(1) }
+      Iterator((q.result(), n.result()))
+    }.collect()
+    val rowsOf = qIds.indices.groupBy(qIds(_))
+    val keys = Array.newBuilder[Long]; val qis = Array.newBuilder[Int]
+    for ((sq, sn) <- lists; i <- sq.indices; qi <- rowsOf(sq(i))) { keys += sn(i); qis += qi }
+    cosineTopK(raw.select(col("nn_id").cast("long"), col("cv"), array(col("nn_id").cast("long"))),
+      Array(Routes(keys.result(), qis.result())), None, qIds, qVecs, k, 4, qType, idType)
+  }
+
+  /** The coarse and PQ codebooks of an IVF-PQ index over (nn_id, cv)
+    * rows: ONE sampling scan feeds all 9 fits (coarse + m sub-spaces)
+    * when the bounded sample fits locally; the Spark ML fallback pays one
+    * corpus scan per fit, which dominated the 20M-vector index build. */
+  private def fitIvfPq(c: DataFrame, nlist: Int, m: Int, ksub: Int, seed: Long,
+      maxIter: Int, trainFraction: Double): (Array[Array[Double]], Array[Array[Array[Double]]]) =
+    collectSample(c.select(col("cv")), math.max(nlist, ksub).toLong * 10, seed, trainFraction) match {
+      case Some(s) => (localKMeans(s, nlist, maxIter, seed), pqTrainLocal(s, m, ksub, seed, maxIter))
+      case None => (fitCenters(c, nlist, seed, maxIter, trainFraction),
+        pqTrain(c, "cv", m, ksub, seed, maxIter, trainFraction))
+    }
+
   /** IVF-PQ ANN: coarse k-means cell routing (as [[ivfTopK]]) with
     * asymmetric-distance PQ scoring inside the probed cells — the
     * memory-bounded serving shape. Each query precomputes one m×ksub
-    * lookup table of sub-space inner products against the codebooks
-    * (16 KB at m=8/ksub=256, riding the broadcast query row); a
+    * lookup table of sub-space inner products against the codebooks; a
     * candidate's approximate cosine is m table lookups against its code
     * bytes — no full-vector arithmetic, and the probed cells need only
     * codes + norms in memory. `rerank > 0` re-scores the PQ top-`rerank`
-    * shortlist exactly against the raw vectors (one broadcast semi-join
-    * back to the corpus — the standard IVFADC+R refinement), recovering
-    * quantization loss for a cost proportional to the shortlist, not the
-    * corpus. PQ here quantizes raw vectors, not cell residuals: at
-    * cosine similarity (normalized scores) the residual variant's gain
-    * is marginal and the raw form keeps encode independent of the coarse
-    * quantizer, so codes survive an IVF re-clustering. */
+    * shortlist exactly against the raw vectors (the standard IVFADC+R
+    * refinement), recovering quantization loss for a cost proportional to
+    * the shortlist, not the corpus; both stages run in the kernel
+    * ([[ivfPqSearch]]). PQ here quantizes raw vectors, not cell
+    * residuals: at cosine similarity (normalized scores) the residual
+    * variant's gain is marginal and the raw form keeps encode independent
+    * of the coarse quantizer, so codes survive an IVF re-clustering. */
   def ivfPqTopK(corpus: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, k: Int, nlist: Int = 16,
       nprobe: Int = 4, m: Int = 8, ksub: Int = 256, rerank: Int = 0,
       seed: Long = 42L, maxIter: Int = 5,
       trainFraction: Double = 0.1): DataFrame = {
     val c = corpus.select(col(idCol).as("nn_id"), col(vecCol).cast("array<double>").as("cv"))
-    // ONE sampling scan feeds all 9 codebooks (coarse + m sub-spaces)
-    // when the bounded sample fits locally; the Spark ML fallback pays
-    // one corpus scan per fit, which dominated the 20M-vector index build
-    val sampleOpt = collectSample(c.select(col("cv")),
-      math.max(nlist, ksub).toLong * 10, seed, trainFraction)
-    val centers: Array[Array[Double]] = sampleOpt match {
-      case Some(s) => localKMeans(s, nlist, maxIter, seed)
-      case None => fitCenters(c, nlist, seed, maxIter, trainFraction)
-    }
-    val books = sampleOpt match {
-      case Some(s) => pqTrainLocal(s, m, ksub, seed, maxIter)
-      case None => pqTrain(corpus, vecCol, m, ksub, seed, maxIter, trainFraction)
-    }
-    val dsub = books(0)(0).length
-    val assigned = c.withColumn("cell", nearestCell(centers)(col("cv")))
-      .select("nn_id", "cv", "cell")
-    // cell rides through the encoder — the previous join-back re-shuffled
-    // the whole encoded corpus against `assigned` (two wide exchanges of
-    // n rows) just to restore a column the scan already had
-    val encoded = pqEncode(assigned, "nn_id", "cv", books, keepCols = Seq("cell"))
-    val probeCells = udf { (v: Seq[Double]) =>
-      centers.zipWithIndex.map { case (ctr, i) =>
-        var s = 0.0; var j = 0
-        while (j < ctr.length) { val d = ctr(j) - v(j); s += d * d; j += 1 }
-        (s, i)
-      }.sortBy(_._1).take(nprobe).map(_._2)
-    }
-    val lut = udf { (qv: Seq[Double]) =>
-      val t = new Array[Double](m * ksub)
-      var j = 0
-      while (j < m) {
-        val cb = books(j); var c2 = 0
-        while (c2 < cb.length) {
-          var s = 0.0; var d = 0
-          while (d < dsub) { s += qv(j * dsub + d) * cb(c2)(d); d += 1 }
-          t(j * ksub + c2) = s; c2 += 1
-        }
-        j += 1
-      }
-      t
-    }
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).cast("array<double>").as("qv"))
-      .withColumn("lut", lut(col("qv")))
-      .withColumn("qnorm", sqrt(aggregate(col("qv"), lit(0.0), (acc, x) => acc + x * x)))
-      .withColumn("cell", explode(probeCells(col("qv"))))
-    val scored = encoded.join(broadcast(q), Seq("cell"))
-      .filter(col("nn_id") =!= col("query_id"))
-      // native ADC: the UDF version deserialized the full 2048-entry LUT
-      // to a boxed Seq per scored row; pqAdc reads the m addressed
-      // entries off ArrayData inside codegen
-      .withColumn("sim", round(pqAdc(col("codes"), col("lut")) /
-        (col("qnorm") * col("norm")), 4))
-      .select("query_id", "nn_id", "sim")
-    if (rerank <= 0) rankTopK(scored, k)
-    else {
-      val shortlist = rankTopK(scored, rerank).select("query_id", "nn_id")
-      val qv = queries.select(col(idCol).as("query_id"), col(vecCol).cast("array<double>").as("qv"))
-      val exact = c.join(broadcast(shortlist), Seq("nn_id"))
-        .join(broadcast(qv), Seq("query_id"))
-        .withColumn("sim", round(cosineSim(col("qv"), col("cv")), 4))
-        .select("query_id", "nn_id", "sim")
-      rankTopK(exact, k)
-    }
+    val (centers, books) = fitIvfPq(c, nlist, m, ksub, seed, maxIter, trainFraction)
+    // cell rides through the encoder: no join back to the assigned rows
+    val encoded = pqEncode(assignCells(c, centers), "nn_id", "cv", books, keepCols = Seq("cell"))
+    val idType = idTypeOf(corpus, idCol)
+    ivfPqSearch(queries, idCol, vecCol, centers, books, nprobe, k, rerank, idType, idType,
+      _ => encoded, q => encoded.join(broadcast(q), col("cell") === col("qcell")), c)
   }
 
   /** Approximate top-k via standard multi-table LSH: `tables` independent
     * `nBits`-bit signature tables; a corpus vector is a candidate if it
     * collides with the query in ANY table. Recall rises with `tables`,
-    * cost with candidates-per-query (≈ tables × corpus / 2^nBits). */
+    * cost with candidates-per-query (≈ tables × corpus / 2^nBits).
+    * Signatures are the native graft.plans.HyperplaneSignatures, computed
+    * in the corpus scan and on the driver for the queries.
+    *
+    * Multi-probe (Lv et al., VLDB'07, bit-flip simplification): each query
+    * additionally probes `probes` Hamming-1 neighbor buckets per table —
+    * a near-threshold vector that lands one bit away is still found, so
+    * the same recall needs ~probes× fewer tables. Only the query side fans
+    * out (more routing-table entries); the corpus is scanned once. A query
+    * reached through several tables is scored once per row, and duplicate
+    * query ids rank together, as the join form's (query_id, nn_id) dedup
+    * had it. */
   def lshTopK(corpus: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, k: Int, nBits: Int = 6,
       tables: Int = 8, probes: Int = 0): DataFrame = {
-    val c = signatures(
-      corpus.select(col(idCol).as("nn_id"), col(vecCol).cast("array<double>").as("cv")),
-      "nn_id", "cv", nBits, tables)
-    val q0 = signatures(
-      queries.select(col(idCol).as("query_id"), col(vecCol).cast("array<double>").as("qv")),
-      "query_id", "qv", nBits, tables)
-    // Multi-probe (Lv et al., VLDB'07, bit-flip simplification): each query
-    // additionally probes `probes` Hamming-1 neighbor buckets per table —
-    // a near-threshold vector that lands one bit away is still found, so
-    // the same recall needs ~probes× fewer tables. Only the QUERY side
-    // fans out (queries are broadcast and tiny); the corpus index size and
-    // its one shuffle are unchanged — that is the 100 TB win: index cost
-    // is per-corpus-row, probe cost is per-query.
-    val q =
-      if (probes <= 0) q0
-      else q0.withColumn("sig", explode(array(
-        col("sig") +: (0 until math.min(probes, nBits)).map(b =>
-          col("sig").bitwiseXOR(lit(1L << b))): _*)))
-    // Score BEFORE the dedup exchange, then project to (query_id, nn_id,
-    // sim): sim is a pure function of the pair, so dedup-then-score ≡
-    // score-then-dedup row-for-row — but the dropDuplicates exchange used
-    // to carry qv + cv (~1 KB/row, candidates × tables × probes rows);
-    // narrowed it ships 24 B/row. A multi-collision candidate pays its
-    // (cheap, codegen'd) cosine once per collision instead of once — the
-    // native kernel is ~100 ns against the ~1 KB/row exchange it removes.
-    val scored = c.join(broadcast(q), Seq("tbl", "sig"))
-      .filter(col("nn_id") =!= col("query_id"))
-      .withColumn("sim", round(cosineSim(col("qv"), col("cv")), 4))
-      .select("query_id", "nn_id", "sim")
-      .dropDuplicates("query_id", "nn_id")
-    rankTopK(scored, k)
+    val c = corpus.select(col(idCol).as("nn_id"), col(vecCol).cast("array<double>").as("cv"))
+    val flips = math.max(0, math.min(probes, nBits))
+    val (idType, qType) = (idTypeOf(corpus, idCol), idTypeOf(queries, idCol))
+    kernelQueries(queries, idCol, vecCol, idType, qType) match {
+      case Some((qIds, qVecs)) =>
+        val sigs = qVecs.map(v => graft.plans.HyperplaneSignatures.compute(
+          org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(v), nBits, tables,
+          isFloat = false).toLongArray())
+        // per table: each probed bucket (the signature, then its low-bit flips)
+        val routes = Array.tabulate(tables)(t => Routes(
+          sigs.flatMap(s => s(t) +: (0 until flips).map(b => s(t) ^ (1L << b))),
+          qIds.indices.toArray.flatMap(Array.fill(flips + 1)(_))))
+        val firstRow = scala.collection.mutable.HashMap.empty[Long, Int]
+        cosineTopK(c.select(col("nn_id").cast("long"), col("cv"),
+            hyperplaneSignatures(col("cv"), nBits, tables)), routes,
+          Some(qIds.indices.map(qi => firstRow.getOrElseUpdate(qIds(qi), qi)).toArray),
+          qIds, qVecs, k, 4, qType, idType)
+      case None =>
+        def signatures(df: DataFrame, idName: String, vecName: String) =
+          df.select(col(idName), col(vecName),
+            posexplode(hyperplaneSignatures(col(vecName), nBits, tables)).as(Seq("tbl", "sig")))
+        val q0 = signatures(queryRows(queries, idCol, vecCol), "query_id", "qv")
+        val q = if (flips == 0) q0 else q0.withColumn("sig", explode(array(
+          col("sig") +: (0 until flips).map(b => col("sig").bitwiseXOR(lit(1L << b))): _*)))
+        joinTopK(signatures(c, "nn_id", "cv").join(broadcast(q), Seq("tbl", "sig")),
+          cosineScore(4), k, dedupe = true)
+    }
   }
   // ---- persisted IVF-PQ index: the complete memory-bounded serving layout
 
   /** Write the PQ rows (nn_id, cell, codes, norm) of `c` into the
     * cell-bucketed `table` — raw vectors never land in the index. */
   private def writePqRows(c: DataFrame, centers: Array[Array[Double]],
-      books: Array[Array[Array[Double]]], table: String, mode: String): Unit = {
-    val assigned = c.withColumn("cell", nearestCell(centers)(col("cv")))
-      .select("nn_id", "cv", "cell")
-    pqEncode(assigned, "nn_id", "cv", books, keepCols = Seq("cell"))
-      .select("nn_id", "cell", "codes", "norm")
-      .repartition(col("cell"))
-      .write.mode(mode)
-      .bucketBy(centers.length, "cell").sortBy("cell")
-      .format("parquet").saveAsTable(table)
-  }
+      books: Array[Array[Array[Double]]], table: String, mode: String): Unit =
+    writeCells(pqEncode(assignCells(c, centers), "nn_id", "cv", books, keepCols = Seq("cell"))
+      .select("nn_id", "cell", "codes", "norm"), centers.length, table, mode)
 
   /** Persist the coarse + PQ codebooks alongside the codes table, as rows
     * (kind, i, c, v): ("coarse", 0, cellIdx, centroid) and
@@ -992,16 +1014,7 @@ object Similarity {
       : (Array[Array[Double]], Array[Array[Array[Double]]]) = {
     val c = corpus.select(col(idCol).as("nn_id"),
       col(vecCol).cast("array<double>").as("cv"))
-    val sampleOpt = collectSample(c.select(col("cv")),
-      math.max(nlist, ksub).toLong * 10, seed, trainFraction)
-    val centers = sampleOpt match {
-      case Some(s) => localKMeans(s, nlist, maxIter, seed)
-      case None => fitCenters(c, nlist, seed, maxIter, trainFraction)
-    }
-    val books = sampleOpt match {
-      case Some(s) => pqTrainLocal(s, m, ksub, seed, maxIter)
-      case None => pqTrain(corpus, vecCol, m, ksub, seed, maxIter, trainFraction)
-    }
+    val (centers, books) = fitIvfPq(c, nlist, m, ksub, seed, maxIter, trainFraction)
     writePqRows(c, centers, books, table, "overwrite")
     saveCodebooks(c.sparkSession, table, centers, books)
     (centers, books)
@@ -1055,64 +1068,24 @@ object Similarity {
     centers
   }
 
-  /** Query a persisted IVF-PQ index: probed cells resolve to bucket-file
-    * seeks (graft.api.Lookup — only nprobe of the nlist files are read),
-    * ADC scores the resident codes, and `rerank > 0` re-scores the
-    * shortlist exactly against `rerankFrom` (the raw-vector source of
-    * truth, which the index itself deliberately does not hold). */
+  /** Query a persisted IVF-PQ index: the kernel scans only the probed
+    * cells' bucket files ([[graft.api.Lookup.seek]]), ADC scores the
+    * resident codes, and `rerank > 0` re-scores the shortlist exactly
+    * against `rerankFrom` (the raw-vector source of truth, which the index
+    * deliberately does not hold) — see [[ivfPqSearch]]. */
   def ivfPqTopKIndexed(spark: org.apache.spark.sql.SparkSession, table: String,
       centers: Array[Array[Double]], books: Array[Array[Array[Double]]],
       queries: DataFrame, idCol: String, vecCol: String, k: Int,
       nprobe: Int = 4, rerank: Int = 0,
       rerankFrom: Option[DataFrame] = None): DataFrame = {
-    val m = books.length
-    val ksub = books(0).length
-    val dsub = books(0)(0).length
-    val probeCells = udf { (v: Seq[Double]) =>
-      centers.zipWithIndex.map { case (ctr, i) =>
-        var s = 0.0; var j = 0
-        while (j < ctr.length) { val d = ctr(j) - v(j); s += d * d; j += 1 }
-        (s, i)
-      }.sortBy(_._1).take(nprobe).map(_._2)
-    }
-    val lut = udf { (qv: Seq[Double]) =>
-      val t = new Array[Double](m * ksub)
-      var j = 0
-      while (j < m) {
-        val cb = books(j); var c2 = 0
-        while (c2 < cb.length) {
-          var s = 0.0; var d = 0
-          while (d < dsub) { s += qv(j * dsub + d) * cb(c2)(d); d += 1 }
-          t(j * ksub + c2) = s; c2 += 1
-        }
-        j += 1
-      }
-      t
-    }
-    val q = queries.select(col(idCol).as("query_id"),
-        col(vecCol).cast("array<double>").as("qv"))
-      .withColumn("lut", lut(col("qv")))
-      .withColumn("qnorm", sqrt(aggregate(col("qv"), lit(0.0), (acc, x) => acc + x * x)))
-      .withColumn("qcell", explode(probeCells(col("qv"))))
-    val scored = graft.api.Lookup.lookupJoin(spark, q, table, "qcell", "cell")
-      .filter(col("nn_id") =!= col("query_id"))
-      .withColumn("sim", round(pqAdc(col("codes"), col("lut")) /
-        (col("qnorm") * col("norm")), 4))
-      .select("query_id", "nn_id", "sim")
-    if (rerank <= 0) rankTopK(scored, k)
-    else {
-      val src = rerankFrom.getOrElse(throw new IllegalArgumentException(
-        "rerank > 0 needs rerankFrom — the raw-vector source the index does not hold"))
-      val shortlist = rankTopK(scored, rerank).select("query_id", "nn_id")
-      val cvs = src.select(col(idCol).as("nn_id"),
-        col(vecCol).cast("array<double>").as("cv"))
-      val qv = queries.select(col(idCol).as("query_id"),
-        col(vecCol).cast("array<double>").as("qv"))
-      val exact = cvs.join(broadcast(shortlist), Seq("nn_id"))
-        .join(broadcast(qv), Seq("query_id"))
-        .withColumn("sim", round(cosineSim(col("qv"), col("cv")), 4))
-        .select("query_id", "nn_id", "sim")
-      rankTopK(exact, k)
-    }
+    if (rerank > 0 && rerankFrom.isEmpty) throw new IllegalArgumentException(
+      "rerank > 0 needs rerankFrom — the raw-vector source the index does not hold")
+    def raw = rerankFrom.get.select(col(idCol).as("nn_id"),
+      col(vecCol).cast("array<double>").as("cv"))
+    val codeType = spark.table(table).schema("nn_id").dataType
+    ivfPqSearch(queries, idCol, vecCol, centers, books, nprobe, k, rerank, codeType,
+      if (rerank > 0) idTypeOf(rerankFrom.get, idCol) else codeType,
+      graft.api.Lookup.seek(spark, table, _),
+      graft.api.Lookup.lookupJoin(spark, _, table, "qcell", "cell"), raw)
   }
 }

@@ -4,12 +4,14 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev aid: sweep IVF-PQ parameters against the pipeline corpus and print
-  * recall@10 + seconds per combo (not part of the shipped surface). */
+  * recall@10 + seconds per combo (not part of the shipped surface). Runs
+  * on SPARK_GRAFT_CPUS cores (default 16), as Bench and Verify do. */
 object AnnTune {
   def main(args: Array[String]): Unit = {
     val scale = sys.env.getOrElse("SPARK_GRAFT_PIPELINE_SCALE", "1").toInt
-    val spark = SparkSession.builder().master("local[16]")
-      .config("spark.sql.shuffle.partitions", 16)
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
+    val spark = SparkSession.builder().master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -38,6 +38,10 @@ class IvfIndexSpec extends GraftSpec {
       val expected = Set(0, 1).map(c =>
         Lookup.bucketFor(c, org.apache.spark.sql.types.IntegerType, 16))
       assert(touched.subsetOf(expected), s"touched $touched, expected $expected")
+      // the indexed tiers read through seek: only the probed cells' buckets
+      val seekFiles = Lookup.seek(spark, "ivf_idx", Seq(0, 1)).inputFiles
+      assert(seekFiles.nonEmpty &&
+        seekFiles.forall(f => Lookup.bucketIdOf(f).exists(expected)), seekFiles.toSeq)
       // the seek reads strictly fewer files than a full index scan would
       // (cells can hash-collide into shared buckets, so files < nlist)
       assert(spark.table("ivf_idx").inputFiles.length > touched.size)
